@@ -1,5 +1,6 @@
 """Relational metadata catalog — the reference's 3-table MySQL catalog
-(sessions → tables → column descriptors) as Spark-managed Parquet tables.
+(sessions → tables → column descriptors) as Parquet tables answered on
+the driver.
 
 Reference model (SURVEY.md §1.2; lib/hbacker/mysql.rb:12-102):
 
@@ -28,8 +29,15 @@ Design choices vs the reference:
   (``end_info(wait=True)``, FENCE_WAIT_S) for fleet deployments;
   read-after-write consistency itself needs no retry — Parquet reads
   from one driver are consistent.
-- All queries (C5-C10) are DataFrame plans: filters push down, the C5
-  session join broadcasts the (tiny) sessions side.
+- Every lookup and rewrite runs in plain Python on the driver. The
+  catalog holds metadata-sized rows, so a Spark job per lookup would be
+  all overhead: reads stream the committed version's pinned files
+  through the Hadoop FS and decode them with pyarrow into Python rows
+  (naive-UTC datetimes, NULL for columns legacy files lack); writes
+  encode rows with pyarrow the same way. The public C5/C7/C9/C10 API
+  and :meth:`Catalog.read` still return DataFrames — one
+  ``createDataFrame`` over an Arrow table of the Python answer, which
+  launches no job — for the CLI and the catalog queries.
 - ALL filesystem mutation goes through the Hadoop FileSystem API
   (VERDICT r9 #1), never ``os``/``shutil``: the reference's catalog
   was network-reachable from every worker by design (MySQL,
@@ -54,19 +62,21 @@ Design choices vs the reference:
   not loss).
 
 At scale the catalog is millions of rows at most (one per table per
-session) — broadcastable by construction; payload data never flows
-through it.
+session); payload data never flows through it.
 """
 
 from __future__ import annotations
 
+import re
 import uuid
 import warnings
+from collections import Counter
 from contextlib import contextmanager
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from hbacker_spark.sources import storage
@@ -86,11 +96,9 @@ class CatalogContentionError(RuntimeError):
 # momentary swap. Sleep-poll, never busy-wait.
 FENCE_WAIT_S = 30.0
 FENCE_POLL_S = 0.25
-# Plain APPENDS get a far larger bound (r10): an append holds the fence
-# across one Spark write (~1-3s; more under a concurrent fleet's FAIR
-# sharing), so a max_concurrent pool's row inserts QUEUE on the fence —
-# 12 tables at 4 workers measured past the 30s bound (concurrency_smoke
-# caught it). Unlike a read-modify-swap, a waiting append can never
+# Plain APPENDS get a far larger bound (r10): a max_concurrent pool's
+# row inserts QUEUE on the fence, and a long fleet queue measured past
+# the 30s bound. Unlike a read-modify-swap, a waiting append can never
 # base itself on stale state — waiting longer is strictly safe, and
 # crashing a fleet export because the metadata lock queue ran long is
 # the worse failure. Swaps keep the tight bound; appends wait out the
@@ -100,10 +108,9 @@ APPEND_FENCE_WAIT_S = 300.0
 # fold rounds an append/rewrite gets before raising the (lossless, loud)
 # CatalogContentionError. 5 is plenty when writers are serialized or the
 # fence is real; a fence-DISABLED writer pair on a loaded host can
-# legitimately need more rounds because each round is a full Spark write
-# and a slow appender trickles one new file into every round. Read at
-# call time so tests/deployments can widen the budget without widening
-# the default contract.
+# legitimately need more rounds because a slow appender trickles one
+# new file into every round. Read at call time so tests/deployments can
+# widen the budget without widening the default contract.
 RECONCILE_ROUNDS_DEFAULT = 5
 
 
@@ -136,9 +143,9 @@ TABLES_SCHEMA = T.StructType(
         # chain key (ADVICE r8): session_name alone is minted at second
         # granularity (mint_session_name), so two chains exporting in
         # the same second collide on a session_name-only join. Table
-        # rows record their chain's dest_root so restore_sessions /
-        # next_start_times key on the composite; NULL on rows written
-        # by older catalogs (those fall back to the session join).
+        # rows record their chain's dest_root so every chain lookup
+        # keys on the composite; NULL on rows written by older catalogs
+        # (those fall back to the session join, see _in_chain).
         T.StructField("dest_root", T.StringType(), True),
         T.StructField("start_time", T.LongType(), True),
         T.StructField("end_time", T.LongType(), True),
@@ -192,6 +199,28 @@ _TABLES = {
     "column_descriptors": DESCRIPTORS_SCHEMA,
 }
 
+# C5's answer and C10's session → table left join, as frames
+_NAMES_SCHEMA = T.StructType([T.StructField("table_name", T.StringType(), False)])
+_REPORT_COLS = (
+    ("session_name", "s", "session_name"),
+    ("cluster_name", "s", "cluster_name"),
+    ("dest_root", "s", "dest_root"),
+    ("started_at", "s", "started_at"),
+    ("ended_at", "s", "ended_at"),
+    ("session_error", "s", "error"),
+    ("table_name", "t", "table_name"),
+    ("start_time", "t", "start_time"),
+    ("end_time", "t", "end_time"),
+    ("empty", "t", "empty"),
+    ("table_error", "t", "error"),
+)
+_REPORT_SCHEMA = T.StructType(
+    [
+        T.StructField(alias, (SESSIONS_SCHEMA if side == "s" else TABLES_SCHEMA)[col].dataType, True)
+        for alias, side, col in _REPORT_COLS
+    ]
+)
+
 # Commit-reconciliation merge keys (VERDICT r11 #3). ``tables`` and
 # ``column_descriptors`` are append-only — a conflicting version's
 # net-new rows fold back as a plain multiset union. ``sessions`` takes
@@ -207,36 +236,69 @@ _MERGE_KEYS: dict[str, list[str] | None] = {
     "column_descriptors": None,
 }
 
+# Spark type → arrow type. The catalog's naive datetimes ARE UTC
+# (_now()); they are stored as timestamp[us, UTC] and decoded back to
+# naive UTC, so values round-trip exactly under any Spark session zone.
+_ARROW = {
+    T.LongType: pa.int64(),
+    T.StringType: pa.string(),
+    T.BooleanType: pa.bool_(),
+    T.TimestampType: pa.timestamp("us", tz="UTC"),
+}
+
 
 def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
+def _rows_to_arrow(rows: list[dict], schema: T.StructType) -> pa.Table:
+    fields = [pa.field(f.name, _ARROW[type(f.dataType)]) for f in schema.fields]
+    return pa.Table.from_pylist(rows, schema=pa.schema(fields))
+
+
 def _rows_to_parquet_bytes(rows: list[dict], schema: T.StructType) -> bytes:
-    """Serialize catalog rows to one parquet file in memory (pyarrow).
-
-    Types mirror the Spark schema: LongType→int64, StringType→string,
-    BooleanType→bool, TimestampType→timestamp[us, UTC] (the catalog's
-    naive datetimes ARE UTC — _now() — and the tz-annotated arrow type
-    is what Spark's reader maps back to TimestampType under the UTC
-    session zone, so values round-trip exactly)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    type_map = {
-        T.LongType: pa.int64(),
-        T.StringType: pa.string(),
-        T.BooleanType: pa.bool_(),
-        T.TimestampType: pa.timestamp("us", tz="UTC"),
-    }
-    fields, arrays = [], []
-    for f in schema.fields:
-        pat = type_map[type(f.dataType)]
-        fields.append(pa.field(f.name, pat, nullable=True))
-        arrays.append(pa.array([r.get(f.name) for r in rows], type=pat))
+    """Serialize catalog rows to one parquet file in memory (pyarrow)."""
     buf = pa.BufferOutputStream()
-    pq.write_table(pa.Table.from_arrays(arrays, schema=pa.schema(fields)), buf, compression="snappy")
+    pq.write_table(_rows_to_arrow(rows, schema), buf, compression="snappy")
     return buf.getvalue().to_pybytes()
+
+
+def _decode(data: bytes, schema: T.StructType) -> list[dict]:
+    """Rows of one catalog parquet file, cast to the catalog schema.
+
+    Any writer's timestamps (pyarrow's timestamp[us, UTC], Spark's
+    INT96) come back as naive UTC datetimes; a column the file lacks
+    (``tables.dest_root`` in older catalogs) comes back NULL."""
+    t = pq.read_table(pa.BufferReader(data))
+    cols = []
+    for f in schema.fields:
+        typ = _ARROW[type(f.dataType)]
+        col = t[f.name].cast(typ) if f.name in t.column_names else pa.nulls(t.num_rows, typ)
+        cols.append(col.cast(pa.timestamp("us")) if pa.types.is_timestamp(typ) else col)
+    return pa.Table.from_arrays(cols, names=schema.names).to_pylist()
+
+
+def _multiset(rows: list[dict], schema: T.StructType) -> Counter:
+    return Counter(tuple(r[n] for n in schema.names) for r in rows)
+
+
+def _freshness(row: dict) -> tuple[datetime, datetime]:
+    """Sort key: freshest updated_at, then ended_at; NULLs lose."""
+    return (row["updated_at"] or datetime.min, row.get("ended_at") or datetime.min)
+
+
+def _like(pattern: str | None):
+    """SQL LIKE as a predicate, with Spark's semantics: ``%`` matches any
+    run, ``_`` one character, ``\\`` escapes the next character, and
+    NULL never matches. ``None`` matches everything."""
+    if pattern is None:
+        return lambda s: True
+    tokens = re.findall(r"\\.|.", pattern, re.DOTALL)
+    rx = re.compile(
+        "".join(".*" if t == "%" else "." if t == "_" else re.escape(t[-1]) for t in tokens),
+        re.DOTALL,
+    )
+    return lambda s: s is not None and rx.fullmatch(s) is not None
 
 
 def mint_session_name(ts: datetime | None = None) -> str:
@@ -246,8 +308,6 @@ def mint_session_name(ts: datetime | None = None) -> str:
 
 def canonical_cluster_name(host: str) -> str:
     """U2: hostname canonicalization, [-.] → _ (cli.rb:354,360)."""
-    import re
-
     return re.sub(r"[-.]", "_", host)
 
 
@@ -260,22 +320,26 @@ class Catalog:
         return storage.join_path(self.root, table)
 
     def read(self, table: str) -> DataFrame:
-        """Wait-free read (VERDICT r10 #1): resolve the current committed
-        version dir (one listing, no fence, no exceptions) and scan it.
-        The resolved files survive one full subsequent swap (commit_version
-        keep_previous=1, plus the r12 retention TTL), so a reader racing
-        an end_info/compact swap completes on the previous version instead
-        of FileNotFound-ing; legacy pre-r11 catalogs resolve to the table
-        dir itself."""
-        return self._read_with_parent(table)[0]
+        """Wait-free read (VERDICT r10 #1) of a whole catalog table as a
+        DataFrame. The rows come from :meth:`_read_snapshot`: the current
+        committed version (one listing, no fence), whose files survive one
+        full subsequent swap (commit_version keep_previous=1, plus the r12
+        retention TTL), so a reader racing an end_info/compact swap
+        completes on the previous version instead of FileNotFound-ing;
+        legacy pre-r11 catalogs resolve to the table dir itself."""
+        return self._frame(self._where(table), _TABLES[table])
 
-    def _read_with_parent(self, table: str) -> tuple[DataFrame, int | None]:
-        df, parent, _ = self._read_snapshot(table)
-        return df, parent
+    def _frame(self, rows: list[dict], schema: T.StructType) -> DataFrame:
+        """The DataFrame face of a driver-side answer (no Spark job)."""
+        return self.spark.createDataFrame(_rows_to_arrow(rows, schema), schema)
 
-    def _read_snapshot(
-        self, table: str
-    ) -> tuple[DataFrame, int | None, set[str]]:
+    def _where(self, table: str, **eq) -> list[dict]:
+        """Current rows of ``table`` whose columns equal every given
+        value (a None value is no filter; a NULL cell never matches)."""
+        eq = {k: v for k, v in eq.items() if v is not None}
+        return [r for r in self._read_snapshot(table)[0] if all(r[k] == v for k, v in eq.items())]
+
+    def _read_snapshot(self, table: str) -> tuple[list[dict], int | None, set[str]]:
         """(current rows, the committed version they came from, the data
         files the read was pinned to) — the snapshot a read-modify-swap
         must pass to :meth:`_overwrite` so BOTH conflict classes on an
@@ -287,18 +351,20 @@ class Catalog:
         files, so a later-landing file is provably not in the rewrite).
         ``parent=None`` = legacy/empty layout (no committed version).
         The fence makes both impossible wherever it is atomic."""
-        schema = _TABLES[table]
         path = self._path(table)
         vs = storage.committed_versions(self.spark, path)
         parent = vs[-1] if vs else None
         data = storage.version_dir(path, parent) if parent is not None else path
         files = self._data_files(data)
-        if not files:
-            return self.spark.createDataFrame([], schema), parent, files
-        df = self.spark.read.schema(schema).parquet(
-            *[storage.join_path(data, f) for f in sorted(files)]
-        )
-        return df, parent, files
+        return self._read_files(table, data, files), parent, files
+
+    def _read_files(self, table: str, data_dir: str, names: set[str] | list[str]) -> list[dict]:
+        schema = _TABLES[table]
+        return [
+            row
+            for name in sorted(names)
+            for row in _decode(storage.read_bytes(self.spark, storage.join_path(data_dir, name)), schema)
+        ]
 
     def _data_files(self, data_dir: str) -> set[str]:
         """Visible parquet data files in one version dir (hidden
@@ -327,48 +393,29 @@ class Catalog:
     def _append_rows(self, table: str, rows: list[dict]) -> None:
         """Raw append — caller must hold :meth:`_swap_fence` on ``table``.
 
-        Fast path (r10): the rows are metadata-sized (one per table per
-        session), but a Spark write is a whole job (~1-3s; worse under
-        a concurrent fleet's FAIR sharing) HELD UNDER THE FENCE — the
-        concurrency receipt measured a 4-wide export pool gaining
-        nothing because every table's row insert serialized on ~2s of
-        fence-held Spark scheduling (CONCURRENCY.json, before/after).
-        So the parquet file is built driver-side with pyarrow and
-        streamed through the Hadoop FS (any scheme) in ~10ms; Spark
-        reads it back like any other part file. The stream lands under
-        a DOT-prefixed name first (hidden from Spark/Hadoop input
-        listings — readers deliberately take no fence, and a direct
-        write to the final name would expose a zero-length/partial
-        file to a concurrently-scanning second process, which the old
-        Spark commit protocol never did), then renames into place —
-        rename is the visibility barrier, exactly like the commit
-        protocol it replaces. Falls back to the Spark write if pyarrow
-        is unavailable.
+        The rows become one parquet file built driver-side with pyarrow
+        and streamed through the Hadoop FS (any scheme) in ~10ms — the
+        fence is held for that, not for a Spark write job (r10,
+        CONCURRENCY.json). The stream lands under a DOT-prefixed name
+        first (hidden from input listings — readers deliberately take no
+        fence, and a direct write to the final name would expose a
+        zero-length/partial file to a concurrent reader), then renames
+        into place: rename is the visibility barrier.
 
-        Session-timezone guard (r10 review finding): the arrow type is
-        ``timestamp[us, UTC]`` and the catalog's naive datetimes ARE
-        UTC, which round-trips exactly under the engine's pinned UTC
-        session zone (session.py). Under a NON-UTC session, Spark
-        renders the UTC instant as session-local naive — shifted
-        values, and inconsistent with what the Spark-write fallback
-        would encode — so that configuration routes to the Spark path,
-        which is self-consistent under any zone."""
+        Post-append reconcile (VERDICT r11 #3): on an advisory-fence
+        scheme a concurrent read-modify-swap can publish a NEW version
+        between our resolve and our file landing — a rewrite based on a
+        read that predates our file silently drops it when the old
+        version retires. Each round detects the swap (one listing — the
+        fast path costs nothing more) and, unless our rows are already
+        in the new current version (exact multiset containment), lands
+        them again there. The final land is verified before raising
+        (r13, ADVICE r12) so a retrying caller never duplicates rows."""
         schema = _TABLES[table]
-        utc_session = self.spark.conf.get("spark.sql.session.timeZone", "UTC") in ("UTC", "Etc/UTC")
-        data = None
-        if utc_session:
-            try:
-                data = _rows_to_parquet_bytes(rows, schema)
-            except ImportError:  # no pyarrow: the slow-but-universal path
-                data = None
+        data = _rows_to_parquet_bytes(rows, schema)
+        ours = _multiset(_decode(data, schema), schema)  # as a reader will see them
 
         def land(base: str) -> None:
-            if data is None:
-                df = self.spark.createDataFrame(
-                    [tuple(r.get(f.name) for f in schema.fields) for r in rows], schema
-                )
-                df.coalesce(1).write.mode("append").parquet(base)
-                return
             final = f"{base}/part-{uuid.uuid4().hex}.parquet"
             tmp = f"{base}/.inflight-{uuid.uuid4().hex}.parquet"
             storage.save_bytes(self.spark, tmp, data)
@@ -377,23 +424,12 @@ class Catalog:
         base = self._data_dir(table)  # append INTO the current version
         land(base)
         rounds = _reconcile_rounds()
-        # Post-append reconcile (VERDICT r11 #3): on an advisory-fence
-        # scheme a concurrent read-modify-swap can publish a NEW version
-        # between our resolve and our file landing — a rewrite based on a
-        # read that predates our file silently drops it when the old
-        # version retires. Detect the swap (one listing — the fast path
-        # costs nothing more) and, if our rows did not make it into the
-        # new current version, land them again there. Bounded; each
-        # round's presence check is exact multiset containment.
-        for _ in range(rounds):
+        for attempt in range(rounds + 1):
             cur = storage.resolve_data_dir(self.spark, self._path(table))
-            if cur == base:
-                return
-            ours = self.spark.createDataFrame(
-                [tuple(r.get(f.name) for f in schema.fields) for r in rows], schema
-            )
-            if ours.exceptAll(self.read(table)).isEmpty():
-                return  # the swap's read already included our file
+            if cur == base or not ours - _multiset(self._where(table), schema):
+                return  # no swap, or the swap's read already included our file
+            if attempt == rounds:
+                break
             warnings.warn(
                 f"catalog append to {table!r} raced a concurrent version swap "
                 f"(advisory-fence scheme): re-landing {len(rows)} row(s) into "
@@ -403,18 +439,6 @@ class Catalog:
             )
             base = cur
             land(base)
-        # r13 (ADVICE r12, low): verify the FINAL land before raising —
-        # the loop above only checks convergence at the top of the next
-        # round, so the 5th re-land could have succeeded and raising
-        # here would make a retrying caller duplicate the rows.
-        cur = storage.resolve_data_dir(self.spark, self._path(table))
-        if cur == base:
-            return
-        ours = self.spark.createDataFrame(
-            [tuple(r.get(f.name) for f in schema.fields) for r in rows], schema
-        )
-        if ours.exceptAll(self.read(table)).isEmpty():
-            return
         raise CatalogContentionError(
             f"catalog append to {table!r} could not converge after {rounds} "
             f"attempts — a writer is swapping versions faster than appends can "
@@ -467,21 +491,21 @@ class Catalog:
     def _overwrite(
         self,
         table: str,
-        df: DataFrame,
+        rows: list[dict],
         parent: int | None,
         keep_previous: int = 1,
         ttl_s: float | None = None,
         seen_files: set[str] | None = None,
     ) -> None:
         """Versioned rewrite (VERDICT r10 #1 — C2's UPDATE without Delta):
-        write the new state into the NEXT version dir, then publish it
-        with one commit-marker create. Readers mid-scan keep the
-        previous version's files (retired only by the swap after this
-        one, TTL-extended since r12), so the old delete-then-rename
-        FileNotFound window is gone on every scheme. Callers doing
-        read-modify-write must hold :meth:`_swap_fence` across the READ
-        as well — the commit being atomic does not stop two writers from
-        both basing their rewrite on the same old state.
+        write the new state as one parquet file into the NEXT version
+        dir, then publish it with one commit-marker create. Readers
+        mid-scan keep the previous version's files (retired only by the
+        swap after this one, TTL-extended since r12), so the old
+        delete-then-rename FileNotFound window is gone on every scheme.
+        Callers doing read-modify-write must hold :meth:`_swap_fence`
+        across the READ as well — the commit being atomic does not stop
+        two writers from both basing their rewrite on the same old state.
 
         Two-writer commit reconciliation (VERDICT r11 #3): on
         advisory-fence schemes both writers CAN get past the fence and
@@ -519,9 +543,13 @@ class Catalog:
         for _ in range(rounds):
             n, vdir = storage.begin_version(self.spark, path)
             for v in self._conflict_versions(path, parent, n, folded, ours):
-                df = self._fold_version(table, df, path, v)
+                rows = self._fold_version(table, rows, path, v)
                 folded.add(v)
-            df.coalesce(1).write.mode("overwrite").parquet(vdir)
+            storage.save_bytes(
+                self.spark,
+                storage.join_path(vdir, f"part-{uuid.uuid4().hex}.parquet"),
+                _rows_to_parquet_bytes(rows, _TABLES[table]),
+            )
             note = None
             if folded or folded_files:
                 note = f"merged={sorted(folded)}+{len(folded_files)}f"
@@ -556,15 +584,12 @@ class Catalog:
                 stacklevel=3,
             )
             # next round's base: the now-current state + the late rows
-            df, p2, f2 = self._read_snapshot(table)
+            rows, p2, f2 = self._read_snapshot(table)
             for v in late_v:
-                df = self._fold_version(table, df, path, v)
+                rows = self._fold_version(table, rows, path, v)
                 folded.add(v)
             if late_f:
-                extra = self.spark.read.schema(_TABLES[table]).parquet(
-                    *[storage.join_path(src_dir, f) for f in late_f]
-                )
-                df = self._merge_rows(table, df, extra)
+                rows = self._merge_rows(table, rows, self._read_files(table, src_dir, late_f))
                 folded_files.extend(late_f)
             # appends now land in the CURRENT dir — guard that one next
             src_dir = (
@@ -604,16 +629,13 @@ class Catalog:
         ]
 
     def _fold_version(
-        self, table: str, df: DataFrame, path: str, v: int
-    ) -> DataFrame:
-        """Union a conflicting version's net-new rows into ``df``:
-        exact-duplicate rows drop (multiset exceptAll — we already carry
-        them), then ``sessions`` merges per logical row with the
-        freshest updated_at winning (two updates to different sessions
-        both survive). If the conflicting version's data was already
-        retired before reconciliation could read it (two+ interlopers in
-        one grace window), the loss is unrecoverable — warn loudly
-        rather than fail the commit."""
+        self, table: str, rows: list[dict], path: str, v: int
+    ) -> list[dict]:
+        """Merge a conflicting version's rows into ``rows``
+        (:meth:`_merge_rows`). If the conflicting version's data was
+        already retired before reconciliation could read it (two+
+        interlopers in one grace window), the loss is unrecoverable —
+        warn loudly rather than fail the commit."""
         vdir = storage.version_dir(path, v)
         if not storage.exists(self.spark, vdir):
             warnings.warn(
@@ -623,43 +645,41 @@ class Catalog:
                 RuntimeWarning,
                 stacklevel=3,
             )
-            return df
-        other = self.spark.read.schema(_TABLES[table]).parquet(vdir)
-        return self._merge_rows(table, df, other)
+            return rows
+        return self._merge_rows(table, rows, self._read_files(table, vdir, self._data_files(vdir)))
 
-    def _merge_rows(self, table: str, df: DataFrame, extra: DataFrame) -> DataFrame:
-        """Union ``extra``'s net-new rows into ``df``: exact duplicates
-        drop (multiset exceptAll), then ``sessions`` merges per logical
-        row with the freshest updated_at winning (_MERGE_KEYS)."""
-        merged = df.unionByName(extra.exceptAll(df))
+    def _merge_rows(self, table: str, rows: list[dict], extra: list[dict]) -> list[dict]:
+        """Union ``extra``'s net-new rows into ``rows``: exact duplicates
+        drop (multiset difference — we already carry them), then
+        ``sessions`` merges per logical row with the freshest updated_at
+        winning (_MERGE_KEYS), so two updates to different sessions both
+        survive."""
+        schema = _TABLES[table]
+        new = _multiset(extra, schema) - _multiset(rows, schema)
+        merged = rows + [dict(zip(schema.names, values)) for values in new.elements()]
         keys = _MERGE_KEYS[table]
-        if keys:
-            w = Window.partitionBy(*keys).orderBy(
-                F.col("updated_at").desc_nulls_last(),
-                F.col("ended_at").desc_nulls_last(),
-            )
-            merged = (
-                merged.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        return merged
+        if not keys:
+            return merged
+        best: dict[tuple, dict] = {}
+        for row in merged:
+            k = tuple(row[c] for c in keys)
+            if k not in best or _freshness(row) > _freshness(best[k]):
+                best[k] = row
+        return list(best.values())
 
     def compact(
         self, table: str | None = None, purge: bool = False
     ) -> dict[str, tuple[int, int]]:
         """Collapse append fragmentation in the catalog dirs.
 
-        Every fenced append lands one metadata-sized parquet file (the
-        r10 driver-side fast path made appends ~10ms, which also means
-        a long-running fleet accrues one file per table per session);
+        Every fenced append lands one metadata-sized parquet file, so a
+        long-running fleet accrues one file per table per session;
         ``sessions`` self-compacts on every end_info swap, but
         ``tables``/``column_descriptors`` never get swapped. This
         rewrites each dir to one file under the same fence +
         versioned-commit swap as C2 (readers never see a half state).
         Returns {table: (files_before, files_after)}. Cadence: after a
-        large fleet run, or whenever reads slow — catalog rows are
-        metadata-sized, so this is always a tiny job.
+        large fleet run, or whenever reads slow.
 
         ``purge=True`` (VERDICT r11 #5 — the RTBF twin of
         ``scrub_index(purge=True)``): retire every superseded version
@@ -685,13 +705,13 @@ class Catalog:
                 _, before = storage.dir_bytes_and_files(
                     self.spark, storage.resolve_data_dir(self.spark, self._path(t))
                 )
-                df, parent, files = self._read_snapshot(t)
+                rows, parent, files = self._read_snapshot(t)
                 if purge:
                     self._overwrite(
-                        t, df, parent, keep_previous=0, ttl_s=0.0, seen_files=files
+                        t, rows, parent, keep_previous=0, ttl_s=0.0, seen_files=files
                     )
                 else:
-                    self._overwrite(t, df, parent, seen_files=files)
+                    self._overwrite(t, rows, parent, seen_files=files)
                 _, after = storage.dir_bytes_and_files(
                     self.spark, storage.resolve_data_dir(self.spark, self._path(t))
                 )
@@ -741,18 +761,13 @@ class Catalog:
         cannot vanish under a concurrent end_info swap (ADVICE r8).
         """
         with self._swap_fence("sessions", wait_s=FENCE_WAIT_S):
-            if not allow_duplicate:
-                dup = self.read("sessions").filter(
-                    (F.col("mode") == mode)
-                    & (F.col("cluster_name") == cluster_name)
-                    & (F.col("session_name") == session_name)
-                    & (F.col("dest_root") == dest_root)
+            if not allow_duplicate and self._where(
+                "sessions", mode=mode, cluster_name=cluster_name, session_name=session_name, dest_root=dest_root
+            ):
+                raise ValueError(
+                    f"session already recorded: mode={mode!r} cluster={cluster_name!r} "
+                    f"session={session_name!r} dest_root={dest_root!r}"
                 )
-                if not dup.limit(1).isEmpty():
-                    raise ValueError(
-                        f"session already recorded: mode={mode!r} cluster={cluster_name!r} "
-                        f"session={session_name!r} dest_root={dest_root!r}"
-                    )
             self._append_rows(
                 "sessions",
                 [
@@ -795,28 +810,19 @@ class Catalog:
         end-brackets serialize without caller-side retry loops; a
         number is a custom bound in seconds."""
         wait_s = FENCE_WAIT_S if wait is True else (0.0 if wait is False else float(wait))
-        key = (
-            (F.col("mode") == mode)
-            & (F.col("cluster_name") == cluster_name)
-            & (F.col("session_name") == session_name)
-            & (F.col("dest_root") == dest_root)
-        )
+        key = (mode, cluster_name, session_name, dest_root)
         ended = ended_at or _now()
         # fence spans the read AND the swap: the lost-update race is two
         # writers reading the same old state, not the renames themselves.
         # The parent version rides along so an advisory-scheme double-
         # write is detected and reconciled at commit (VERDICT r11 #3).
         with self._swap_fence("sessions", wait_s=wait_s):
-            df, parent, files = self._read_snapshot("sessions")
-            updated = df.withColumns(
-                {
-                    "ended_at": F.when(key, F.lit(ended)).otherwise(F.col("ended_at")),
-                    "error": F.when(key, F.lit(error)).otherwise(F.col("error")),
-                    "error_info": F.when(key, F.lit(error_info)).otherwise(F.col("error_info")),
-                    "updated_at": F.when(key, F.lit(_now())).otherwise(F.col("updated_at")),
-                }
-            )
-            self._overwrite("sessions", updated, parent, seen_files=files)
+            rows, parent, files = self._read_snapshot("sessions")
+            stamp = _now()
+            for r in rows:
+                if (r["mode"], r["cluster_name"], r["session_name"], r["dest_root"]) == key:
+                    r.update(ended_at=ended, error=error, error_info=error_info, updated_at=stamp)
+            self._overwrite("sessions", rows, parent, seen_files=files)
 
     # ---- C3/C4: per-table results ------------------------------------------
     def exported_table_info(
@@ -900,91 +906,92 @@ class Catalog:
         )
 
     # ---- C5-C9: queries ----------------------------------------------------
-    def table_names(self, session_name: str, dest_root: str, pattern: str | None = None, mode: str = "export") -> DataFrame:
-        """C5 (mysql.rb:274-288): tables of a session, optional LIKE
-        wildcard, validated against the parent session's dest_root (the
-        reference reaches through the FK association — here an explicit
-        broadcast join). Table rows carrying their own dest_root (r9)
-        are keyed on it directly; legacy NULL rows rely on the session
-        join alone."""
-        tables = self.read("tables").filter(
-            (F.col("mode") == mode)
-            & (F.col("session_name") == session_name)
-            & ((F.col("dest_root") == dest_root) | F.col("dest_root").isNull())
-        )
-        if pattern is not None:
-            tables = tables.filter(F.col("table_name").like(pattern))
-        sessions = self.read("sessions").filter((F.col("dest_root") == dest_root) & (F.col("mode") == mode))
-        return (
-            tables.join(F.broadcast(sessions.select("session_name").distinct()), "session_name")
-            .select("table_name")
-            .distinct()
-        )
+    def _in_chain(
+        self, rows: list[dict], dest_root: str, mode: str, cluster_name: str | None = None
+    ) -> list[dict]:
+        """The table rows of one export chain (ADVICE r8): rows whose own
+        dest_root is the chain's — or NULL, as older catalogs wrote them
+        — and whose session is recorded under that dest_root (and
+        ``cluster_name``, when given). The reference reaches the session
+        through the FK association (mysql.rb:285)."""
+        sessions = self._where("sessions", mode=mode, dest_root=dest_root, cluster_name=cluster_name)
+        chain = {s["session_name"] for s in sessions}
+        return [r for r in rows if r["dest_root"] in (dest_root, None) and r["session_name"] in chain]
 
-    def exists(self, table_name: str, session_name: str | None = None, mode: str = "export") -> bool:
-        """C6 (mysql.rb:290-297): membership probe (idempotent resume)."""
-        df = self.read("tables").filter((F.col("mode") == mode) & (F.col("table_name") == table_name))
-        if session_name is not None:
-            df = df.filter(F.col("session_name") == session_name)
-        return not df.limit(1).isEmpty()
+    def _table_rows(
+        self, table_name: str, session_name: str | None, mode: str, dest_root: str | None
+    ) -> list[dict]:
+        rows = self._where("tables", mode=mode, table_name=table_name, session_name=session_name)
+        return rows if dest_root is None else self._in_chain(rows, dest_root, mode)
+
+    def table_names(self, session_name: str, dest_root: str, pattern: str | None = None, mode: str = "export") -> DataFrame:
+        """C5 (mysql.rb:274-288): tables of a session in one chain
+        (:meth:`_in_chain`), optional LIKE wildcard."""
+        like = _like(pattern)
+        rows = [r for r in self._where("tables", mode=mode, session_name=session_name) if like(r["table_name"])]
+        names = sorted({r["table_name"] for r in self._in_chain(rows, dest_root, mode)})
+        return self._frame([{"table_name": n} for n in names], _NAMES_SCHEMA)
+
+    def exists(
+        self,
+        table_name: str,
+        session_name: str | None = None,
+        mode: str = "export",
+        dest_root: str | None = None,
+    ) -> bool:
+        """C6 (mysql.rb:290-297): membership probe (idempotent resume).
+        ``dest_root`` keys the probe on the chain (:meth:`_in_chain`):
+        another chain's session of the same name must not count."""
+        return bool(self._table_rows(table_name, session_name, mode, dest_root))
+
+    def table_info(
+        self, table_name: str, session_name: str, dest_root: str, mode: str = "export"
+    ) -> dict | None:
+        """The latest row of one table in one session of one chain, or
+        None. Latest wins deterministically: a failed attempt's error row
+        and a later success row can share (table, session) (ADVICE r1)."""
+        return max(self._table_rows(table_name, session_name, mode, dest_root), key=_freshness, default=None)
 
     def list_table_info(self, session_name: str, pattern: str | None = None, mode: str = "export") -> DataFrame:
         """C7 (mysql.rb:306-316): full table rows for a session."""
-        df = self.read("tables").filter((F.col("mode") == mode) & (F.col("session_name") == session_name))
-        if pattern is not None:
-            df = df.filter(F.col("table_name").like(pattern))
-        return df
+        like = _like(pattern)
+        rows = [r for r in self._where("tables", mode=mode, session_name=session_name) if like(r["table_name"])]
+        return self._frame(rows, TABLES_SCHEMA)
 
     def column_descriptors(self, table_name: str, session_name: str, mode: str = "export") -> list[dict]:
         """C8 (mysql.rb:324-337): descriptor rows, whitelist projection,
         nil values dropped (stargate.rb:36-44 AVAILABLE_OPTS)."""
-        df = (
-            self.read("column_descriptors")
-            .filter(
-                (F.col("mode") == mode)
-                & (F.col("table_name") == table_name)
-                & (F.col("session_name") == session_name)
-            )
-            .select("name", *DESCRIPTOR_ATTRS)
-        )
-        out = []
-        for row in df.collect():  # descriptor lists are tiny (per-table CF count)
-            d = row.asDict()
-            out.append({k: v for k, v in d.items() if v is not None})
-        return out
+        return [
+            {k: r[k] for k in ("name", *DESCRIPTOR_ATTRS) if r[k] is not None}
+            for r in self._where("column_descriptors", mode=mode, table_name=table_name, session_name=session_name)
+        ]
+
+    def _session_rows(self, mode: str, session_name_pattern: str | None) -> list[dict]:
+        like = _like(session_name_pattern)
+        return [r for r in self._where("sessions", mode=mode) if like(r["session_name"])]
 
     def session_info(self, mode: str, session_name_pattern: str | None = None) -> DataFrame:
         """C9 (mysql.rb:346-363): sessions by mode, optional LIKE."""
-        df = self.read("sessions").filter(F.col("mode") == mode)
-        if session_name_pattern is not None:
-            df = df.filter(F.col("session_name").like(session_name_pattern))
-        return df
+        return self._frame(self._session_rows(mode, session_name_pattern), SESSIONS_SCHEMA)
 
     def session_report(self, mode: str, session_name_pattern: str | None = None) -> DataFrame:
         """C10 (cli.rb:287-322): nested session → table report as one
-        left join (the reference loops two queries; one plan here)."""
-        sessions = self.session_info(mode, session_name_pattern).alias("s")
-        tables = self.read("tables").filter(F.col("mode") == mode).alias("t")
-        return sessions.join(
-            tables,
-            (F.col("s.session_name") == F.col("t.session_name"))
-            # composite chain key when the table row carries it (ADVICE
-            # r8); legacy NULL rows keep the session-name-only match
-            & (F.col("t.dest_root").isNull() | (F.col("t.dest_root") == F.col("s.dest_root"))),
-            "left",
-        ).select(
-            F.col("s.session_name").alias("session_name"),
-            F.col("s.cluster_name").alias("cluster_name"),
-            F.col("s.dest_root").alias("dest_root"),
-            F.col("s.started_at").alias("started_at"),
-            F.col("s.ended_at").alias("ended_at"),
-            F.col("s.error").alias("session_error"),
-            F.col("t.table_name").alias("table_name"),
-            F.col("t.start_time").alias("start_time"),
-            F.col("t.end_time").alias("end_time"),
-            F.col("t.empty").alias("empty"),
-            F.col("t.error").alias("table_error"),
-        )
+        left join (the reference loops two queries). A table row joins
+        its session on the composite chain key when it carries dest_root
+        (ADVICE r8); legacy NULL rows keep the session-name-only match."""
+        tables = self._where("tables", mode=mode)
+        no_table = dict.fromkeys(TABLES_SCHEMA.names)
+        out = []
+        for s in self._session_rows(mode, session_name_pattern):
+            matched = [
+                t
+                for t in tables
+                if t["session_name"] == s["session_name"] and t["dest_root"] in (None, s["dest_root"])
+            ]
+            for t in matched or [no_table]:
+                side = {"s": s, "t": t}
+                out.append({alias: side[src][col] for alias, src, col in _REPORT_COLS})
+        return self._frame(out, _REPORT_SCHEMA)
 
     # ---- §2.B: point-in-time restore session pruning ------------------------
     def restore_sessions(
@@ -994,7 +1001,7 @@ class Catalog:
         cutoff_ts: int,
         mode: str = "export",
         cluster_name: str | None = None,
-    ) -> DataFrame:
+    ) -> list[dict]:
         """Minimal session set for a point-in-time restore of one table
         (VERDICT r7 #2): the sessions in this ``dest_root`` chain whose
         recorded export range for ``table_name`` can contain any cell
@@ -1011,36 +1018,19 @@ class Catalog:
         increments stay restorable; pruning them would silently return
         stale cells (and next_start_times has already advanced the
         watermark past such sessions, so the range would never be
-        re-exported). Chain isolation keys on the table row's own
-        ``dest_root`` (composite with session_name — ADVICE r8:
-        session names are second-granularity and collide across
-        chains); rows from older catalogs without the column fall back
-        to the session-name join alone.
-        Returns (session_name, start_time, end_time) sorted by
-        start_time — a metadata-sized relation (catalog rows, not data).
+        re-exported). Chain isolation: :meth:`_in_chain`.
+        Returns rows {session_name, start_time, end_time} sorted by
+        start_time.
         """
-        tables = self.read("tables").filter(
-            (F.col("mode") == mode)
-            & (F.col("table_name") == table_name)
-            & (F.col("error") == F.lit(False))
-            & (F.col("empty") == F.lit(False))
-            & (F.col("start_time") <= F.lit(int(cutoff_ts)))
-            & ((F.col("dest_root") == dest_root) | F.col("dest_root").isNull())
-        )
-        sessions = self.read("sessions").filter(
-            (F.col("mode") == mode) & (F.col("dest_root") == dest_root)
-        )
-        if cluster_name is not None:
-            sessions = sessions.filter(F.col("cluster_name") == cluster_name)
-        return (
-            tables.join(
-                F.broadcast(sessions.select("session_name").distinct()),
-                "session_name",
-                "left_semi",
-            )
-            .select("session_name", "start_time", "end_time")
-            .orderBy("start_time")
-        )
+        rows = [
+            r
+            for r in self._where("tables", mode=mode, table_name=table_name, error=False, empty=False)
+            if r["start_time"] is not None and r["start_time"] <= cutoff_ts
+        ]
+        return [
+            {k: r[k] for k in ("session_name", "start_time", "end_time")}
+            for r in sorted(self._in_chain(rows, dest_root, mode, cluster_name), key=lambda r: r["start_time"])
+        ]
 
     # ---- §2.B: incremental chain watermark ---------------------------------
     def next_start_times(
@@ -1048,38 +1038,25 @@ class Catalog:
         dest_root: str | None = None,
         mode: str = "export",
         cluster_name: str | None = None,
-    ) -> DataFrame:
+    ) -> list[dict]:
         """Per-table watermark: next export's start_time = max recorded
-        end_time (docs/…HBASE-1684.txt:40-58).
+        end_time (docs/…HBASE-1684.txt:40-58), as rows {table_name,
+        next_start_time}.
 
-        The watermark is keyed by the export CHAIN, not just the table:
-        table rows join to their parent sessions and only sessions whose
-        dest_root (and optionally cluster_name) match contribute.
-        Without this, the first incremental export to a NEW destination
-        would inherit another chain's watermark and silently omit every
-        older cell from the new chain (ADVICE r1). ``dest_root=None``
-        keeps the legacy across-all-chains behavior for callers that
-        genuinely want a global watermark. Since r9 the chain key also
-        uses the table row's own dest_root when present (ADVICE r8 —
-        second-granularity session names collide across chains; legacy
-        NULL rows fall back to the session-name join).
+        The watermark is keyed by the export CHAIN, not just the table
+        (:meth:`_in_chain`): without this, the first incremental export
+        to a NEW destination would inherit another chain's watermark and
+        silently omit every older cell from the new chain (ADVICE r1).
+        ``dest_root=None`` keeps the legacy across-all-chains behavior
+        for callers that genuinely want a global watermark.
         """
-        tables = self.read("tables").filter(
-            (F.col("mode") == mode) & (F.col("error") == F.lit(False))
-        )
+        rows = self._where("tables", mode=mode, error=False)
         if dest_root is not None:
-            tables = tables.filter(
-                (F.col("dest_root") == dest_root) | F.col("dest_root").isNull()
-            )
-            sessions = self.read("sessions").filter(
-                (F.col("mode") == mode) & (F.col("dest_root") == dest_root)
-            )
-            if cluster_name is not None:
-                sessions = sessions.filter(F.col("cluster_name") == cluster_name)
-            # sessions are tiny by construction → broadcast semi-join
-            tables = tables.join(
-                F.broadcast(sessions.select("session_name").distinct()),
-                "session_name",
-                "left_semi",
-            )
-        return tables.groupBy("table_name").agg(F.max("end_time").alias("next_start_time"))
+            rows = self._in_chain(rows, dest_root, mode, cluster_name)
+        ends: dict[str, list[int]] = {}
+        for r in rows:
+            ends.setdefault(r["table_name"], []).append(r["end_time"])
+        return [
+            {"table_name": t, "next_start_time": max((e for e in es if e is not None), default=None)}
+            for t, es in ends.items()
+        ]

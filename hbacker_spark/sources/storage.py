@@ -797,14 +797,20 @@ def save_bytes(spark: SparkSession, full_path: str, data: bytes) -> None:
         out.close()
 
 
-def read_info(spark: SparkSession, full_path: str) -> str:
+def read_bytes(spark: SparkSession, full_path: str) -> bytes:
+    """Read a small artifact whole through the Hadoop FS stream (any
+    scheme) — the read twin of :func:`save_bytes` (e.g. the catalog's
+    metadata-sized parquet files)."""
     fs, hpath = _fs_and_path(spark, full_path)
     stream = fs.open(hpath)
     try:
-        jvm = spark._jvm
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
+
+
+def read_info(spark: SparkSession, full_path: str) -> str:
+    return read_bytes(spark, full_path).decode("utf-8")
 
 
 def list_path(spark: SparkSession, path: str) -> list[dict]:

@@ -6,7 +6,13 @@ from datetime import datetime
 
 import pytest
 
-from hbacker_spark.catalog.catalog import Catalog, canonical_cluster_name, mint_session_name
+from hbacker_spark.catalog.catalog import (
+    SESSIONS_SCHEMA,
+    TABLES_SCHEMA,
+    Catalog,
+    canonical_cluster_name,
+    mint_session_name,
+)
 
 SESSION = "20110101_111111"  # reference fixture value (export_spec.rb:27)
 DEST = "s3n://somebucket/"  # export_spec.rb:28
@@ -125,7 +131,7 @@ def test_next_start_times_watermark(catalog):
     catalog.exported_table_info("t1", "s2", 100, 250, 1)
     catalog.exported_table_info("t2", "s1", 0, 120, 1)
     catalog.exported_table_info("t3", "s1", 0, 999, 1, error=True, error_info="x")  # errors excluded
-    wm = {r["table_name"]: r["next_start_time"] for r in catalog.next_start_times().collect()}
+    wm = {r["table_name"]: r["next_start_time"] for r in catalog.next_start_times()}
     assert wm == {"t1": 250, "t2": 120}
 
 
@@ -434,3 +440,90 @@ def test_catalog_maintain_policy(spark, catalog):
     assert catalog.read("sessions").count() == 10
 
     assert catalog.maintain() == {}  # idempotent: nothing over threshold
+
+
+def test_naive_datetimes_roundtrip_under_non_utc_session(spark, catalog):
+    """The catalog's naive datetimes are UTC; a non-UTC Spark session
+    zone must not shift what start_info/end_info recorded."""
+    started = datetime(2011, 1, 1, 11, 11, 11, 123456)
+    ended = datetime(2011, 1, 1, 23, 59, 59, 654321)
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        catalog.start_info("export", CLUSTER, SESSION, DEST, 0, 1, started_at=started)
+        catalog.end_info("export", CLUSTER, SESSION, DEST, ended_at=ended)
+        row = catalog.session_info("export").collect()[0]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert (row["started_at"], row["ended_at"]) == (started, ended)
+    row = catalog.session_info("export").collect()[0]
+    assert (row["started_at"], row["ended_at"]) == (started, ended)
+
+
+def test_reads_spark_written_sessions_version(spark, catalog):
+    """A sessions version written by Spark's parquet writer (how older
+    catalogs rewrote it) reads back exactly and can be rewritten."""
+    from hbacker_spark.sources import storage
+
+    started = datetime(2011, 1, 1, 11, 11, 11, 250000)
+    row = ("export", CLUSTER, SESSION, DEST, 0, 1, started, None, False, None, started)
+    path = catalog._path("sessions")
+    n, vdir = storage.begin_version(spark, path)
+    spark.createDataFrame([row], SESSIONS_SCHEMA).coalesce(1).write.parquet(vdir)
+    storage.commit_version(spark, path, n)
+    assert [tuple(r) for r in catalog.session_info("export").collect()] == [row]
+
+    catalog.end_info("export", CLUSTER, SESSION, DEST)
+    got = catalog.session_info("export").collect()
+    assert len(got) == 1 and got[0]["started_at"] == started
+    assert got[0]["ended_at"] is not None
+
+
+def test_reads_legacy_tables_without_dest_root(spark, catalog):
+    """Older catalogs wrote ``tables`` unversioned and without the
+    dest_root column: such rows read back with dest_root NULL and join
+    their chain through the session row."""
+    from pyspark.sql import types as T
+
+    _start(catalog)
+    legacy = T.StructType([f for f in TABLES_SCHEMA.fields if f.name != "dest_root"])
+    stamp = datetime(2011, 1, 1, 12, 0, 0)
+    old = ("export", "t_old", SESSION, 0, 100, 1, False, False, None, stamp)
+    spark.createDataFrame([old], legacy).coalesce(1).write.parquet(catalog._path("tables"))
+
+    rows = catalog.read("tables").collect()
+    assert len(rows) == 1 and rows[0]["dest_root"] is None
+    assert tuple(v for k, v in rows[0].asDict().items() if k != "dest_root") == old
+    assert [r["table_name"] for r in catalog.table_names(SESSION, DEST).collect()] == ["t_old"]
+    assert catalog.table_names(SESSION, "file:///nope/").count() == 0
+    assert [r["session_name"] for r in catalog.restore_sessions("t_old", DEST, 50)] == [SESSION]
+    wm = {r["table_name"]: r["next_start_time"] for r in catalog.next_start_times(dest_root=DEST)}
+    assert wm == {"t_old": 100}
+
+    # a new row appends beside the legacy file; both read back
+    catalog.exported_table_info("t_new", SESSION, 0, 200, 1, dest_root=DEST)
+    got = {r["table_name"]: r["dest_root"] for r in catalog.read("tables").collect()}
+    assert got == {"t_old": None, "t_new": DEST}
+
+
+def test_like_helper_matches_spark_like(spark):
+    """The driver-side LIKE used by C5/C7/C9 agrees with Spark's ``like``
+    on wildcards, escapes and regex metacharacters."""
+    from pyspark.sql import functions as F
+
+    from hbacker_spark.catalog.catalog import _like
+
+    values = [
+        "events_a", "events.a", "eventsXa", "events_", "events", "a(b)$", "a(b)$x",
+        "ab", "a_b", "aXb", "%", "100%", "1000", "x.y", "xzy", "a\nb", "", None,
+    ]
+    patterns = [
+        "%", "events%", "events_a", "events\\_a", "events.a", "a(b)$", "a(b)%",
+        "a_b", "a\\_b", "100\\%", "100%", "x.y", "%.%", "_", "a%b", "a$", "",
+    ]
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    rows = df.select("v", *[F.col("v").like(p).alias(f"p{i}") for i, p in enumerate(patterns)]).collect()
+    for i, p in enumerate(patterns):
+        want = [r["v"] for r in rows if r[f"p{i}"]]
+        got = [v for v in values if _like(p)(v)]
+        assert got == want, p

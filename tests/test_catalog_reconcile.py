@@ -42,19 +42,12 @@ def _start(cat: Catalog, name: str) -> None:
     cat.start_info("export", CLUSTER, name, DEST, 0, 0)
 
 
-def _end_expr(df, session_name, ended):
-    key = (
-        (F.col("mode") == "export")
-        & (F.col("cluster_name") == CLUSTER)
-        & (F.col("session_name") == session_name)
-        & (F.col("dest_root") == DEST)
-    )
-    return df.withColumns(
-        {
-            "ended_at": F.when(key, F.lit(ended)).otherwise(F.col("ended_at")),
-            "updated_at": F.when(key, F.lit(ended)).otherwise(F.col("updated_at")),
-        }
-    )
+def _end_rows(rows, session_name, ended):
+    key = ("export", CLUSTER, session_name, DEST)
+    for r in rows:
+        if (r["mode"], r["cluster_name"], r["session_name"], r["dest_root"]) == key:
+            r.update(ended_at=ended, updated_at=ended)
+    return rows
 
 
 def test_stale_overwrite_folds_concurrent_commit(catalog, spark):
@@ -70,9 +63,9 @@ def test_stale_overwrite_folds_concurrent_commit(catalog, spark):
 
     # writer B reads (parent captured), builds its rewrite, but has not
     # committed yet — the advisory-fence double-win window
-    df_b, parent = catalog._read_with_parent("sessions")
+    rows_b, parent, _ = catalog._read_snapshot("sessions")
     ended = datetime.now(timezone.utc).replace(tzinfo=None)
-    stale_b = _end_expr(df_b, "sB", ended)
+    stale_b = _end_rows(rows_b, "sB", ended)
 
     # writer A commits normally in the window
     catalog.end_info("export", CLUSTER, "sA", DEST)
@@ -102,15 +95,15 @@ def test_stale_overwrite_folds_concurrent_append(catalog, spark):
     row after B's read but into B's parent version (so B's df never saw
     it). The fold must union the appended row back in."""
     _start(catalog, "sA")
-    df_b, parent = catalog._read_with_parent("sessions")
-    df_b = df_b.withColumn("error", F.lit(False))  # identity-ish rewrite
+    rows_b, parent, _ = catalog._read_snapshot("sessions")
+    rows_b = [dict(r, error=False) for r in rows_b]  # identity-ish rewrite
     # append lands after B's read; then ANOTHER writer swaps (end_info),
     # carrying the appended row into version parent+1
     _start(catalog, "sNEW")
     catalog.end_info("export", CLUSTER, "sA", DEST)
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        catalog._overwrite("sessions", df_b, parent)
+        catalog._overwrite("sessions", rows_b, parent)
     names = {r["session_name"] for r in catalog.read("sessions").collect()}
     assert names == {"sA", "sNEW"}, f"appended row lost: {names}"
 

@@ -148,7 +148,7 @@ def test_pitr_catalog_pruning_skips_after_cutoff_sessions(spark, store, dest):
     # the derived set is exactly the contributing prefix, in chain order
     names = [
         r["session_name"]
-        for r in store.catalog.restore_sessions("t", dest, cutoff).collect()
+        for r in store.catalog.restore_sessions("t", dest, cutoff)
     ]
     assert names == ["s_full", "s_inc1"]
 
@@ -158,7 +158,7 @@ def test_pitr_catalog_pruning_skips_after_cutoff_sessions(spark, store, dest):
     store.export_tables({"t": cells}, other, "s_other", 0, T3 + 1)
     names2 = [
         r["session_name"]
-        for r in store.catalog.restore_sessions("t", dest, cutoff).collect()
+        for r in store.catalog.restore_sessions("t", dest, cutoff)
     ]
     assert names2 == ["s_full", "s_inc1"]
 
@@ -295,11 +295,11 @@ def test_watermark_keyed_by_dest_root(spark, store, dest, tmp_path):
     store.export_tables({"wm_t": cells}, dest, "chain_a", 0, T2)
     # chain A has a watermark; a brand-new dest_root must not see it
     wm_a = {r["table_name"]: r["next_start_time"]
-            for r in store.catalog.next_start_times(dest_root=dest).collect()}
+            for r in store.catalog.next_start_times(dest_root=dest)}
     assert wm_a["wm_t"] == T2
     other = str(tmp_path / "other_dest")
     wm_b = {r["table_name"]: r["next_start_time"]
-            for r in store.catalog.next_start_times(dest_root=other).collect()}
+            for r in store.catalog.next_start_times(dest_root=other)}
     assert "wm_t" not in wm_b
     # incremental to the new dest therefore exports the FULL range
     store.export_incremental({"wm_t": cells}, other, "chain_b", end_time=T3 + 1)
@@ -369,12 +369,12 @@ def test_pitr_includes_clean_tables_of_mixed_error_session(spark, store, dest, m
     # the watermark for t HAS advanced through s_mixed — so the derived
     # restore set must include it or the range is lost forever
     wm = {r["table_name"]: r["next_start_time"]
-          for r in store.catalog.next_start_times(dest_root=dest).collect()}
+          for r in store.catalog.next_start_times(dest_root=dest)}
     assert wm["t"] == T3 + 1
     assert wm["u"] == T2  # failed table's watermark did NOT advance
 
     names = [r["session_name"]
-             for r in store.catalog.restore_sessions("t", dest, T3 + 1).collect()]
+             for r in store.catalog.restore_sessions("t", dest, T3 + 1)]
     assert names == ["s_full", "s_mixed"], (
         "mixed-error session's clean increments were pruned from the restore set"
     )
@@ -385,7 +385,7 @@ def test_pitr_includes_clean_tables_of_mixed_error_session(spark, store, dest, m
     assert sorted(map(tuple, derived.collect())) == sorted(map(tuple, explicit.collect()))
     # and u restores only its clean prefix
     assert [r["session_name"]
-            for r in store.catalog.restore_sessions("u", dest, T3 + 1).collect()] == ["s_full"]
+            for r in store.catalog.restore_sessions("u", dest, T3 + 1)] == ["s_full"]
 
 
 def test_pitr_cutoff_required_and_positive(spark, store, dest):
@@ -410,17 +410,17 @@ def test_restore_chain_isolation_same_second_session_names(spark, store, dest, t
     store.export_tables({"t": cells}, dest, "s_same", 0, T2)
     store.export_tables({"t": cells}, other, "s_same", 0, T3 + 1)
 
-    rows = store.catalog.restore_sessions("t", dest, T3 + 1).collect()
+    rows = store.catalog.restore_sessions("t", dest, T3 + 1)
     assert len(rows) == 1, "other chain's table row leaked into this chain's restore set"
     assert rows[0]["end_time"] == T2
-    rows_b = store.catalog.restore_sessions("t", other, T3 + 1).collect()
+    rows_b = store.catalog.restore_sessions("t", other, T3 + 1)
     assert len(rows_b) == 1 and rows_b[0]["end_time"] == T3 + 1
 
     # watermarks are isolated per chain too, despite the shared name
     wm_a = {r["table_name"]: r["next_start_time"]
-            for r in store.catalog.next_start_times(dest_root=dest).collect()}
+            for r in store.catalog.next_start_times(dest_root=dest)}
     wm_b = {r["table_name"]: r["next_start_time"]
-            for r in store.catalog.next_start_times(dest_root=other).collect()}
+            for r in store.catalog.next_start_times(dest_root=other)}
     assert wm_a["t"] == T2 and wm_b["t"] == T3 + 1
 
 
@@ -646,3 +646,39 @@ def test_resume_map_attach_survives_slots_exceptions(store):
     for kwargs in ({"max_concurrent": 1}, {"max_concurrent": 2, "fail_fast": True}):
         with _pytest.raises(SlotsError, match="original per-table failure"):
             store._run_table_jobs(["ok", "bad"], job, **kwargs)
+
+
+def test_resume_keys_on_chain_not_session_name(spark, store, dest, tmp_path):
+    """Session names are second-granularity and collide across chains: a
+    resume in chain B must not skip a table because chain A recorded it
+    under the same session name (the C6 probe keys on the chain)."""
+    cells = make_cells(spark)
+    other = str(tmp_path / "chain_b")
+    store.export_tables({"t": cells}, dest, "s_same", 0, T3 + 1)
+    store.catalog.start_info("export", store.cluster_name, "s_same", other, 0, T3 + 1)
+    assert store.export_table(cells, "t", other, "s_same", 0, T3 + 1, resume=True) is True
+    # and a second resume in chain B does skip: now B has the row
+    assert store.export_table(cells, "t", other, "s_same", 0, T3 + 1, resume=True) is False
+    got = store.restore_point_in_time("t", other, cutoff_ts=T3 + 1)
+    want = version_limited(cells, 1)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_import_reads_own_chain_table_row(spark, store, dest, tmp_path, monkeypatch):
+    """import_table's latest-row lookup keys on the chain: chain B's
+    later error row under the same session name must not fail an import
+    of chain A's clean export."""
+    cells = make_cells(spark)
+    other = str(tmp_path / "chain_b")
+    store.export_tables({"t": cells}, dest, "s_same", 0, T3 + 1)
+
+    def broken(self, snap, dest_path):
+        raise ValueError("permanent: chain B write failed")
+
+    monkeypatch.setattr(SnapshotStore, "_write_snapshot", broken)
+    with pytest.raises(ValueError, match="chain B"):
+        store.export_tables({"t": cells}, other, "s_same", 0, T3 + 1)
+    monkeypatch.undo()
+
+    out = store.import_tables(dest, "s_same", "s_imp")
+    assert sorted(map(tuple, out["t"].collect())) == sorted(map(tuple, cells.collect()))
