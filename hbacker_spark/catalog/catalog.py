@@ -37,7 +37,11 @@ Design choices vs the reference:
   encode rows with pyarrow the same way. The public C5/C7/C9/C10 API
   and :meth:`Catalog.read` still return DataFrames — one
   ``createDataFrame`` over an Arrow table of the Python answer, which
-  launches no job — for the CLI and the catalog queries.
+  launches no job — for the CLI and the catalog queries. Each read
+  still lists the current version and its files, but decodes only the
+  files it has not decoded before: rows are cached per table by (version
+  dir, file name), and committed file names are uuid-unique and never
+  rewritten.
 - ALL filesystem mutation goes through the Hadoop FileSystem API
   (VERDICT r9 #1), never ``os``/``shutil``: the reference's catalog
   was network-reachable from every worker by design (MySQL,
@@ -315,6 +319,8 @@ class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # table -> (data dir, {file name: decoded rows}): see _read_snapshot
+        self._decoded: dict[str, tuple[str, dict[str, list[dict]]]] = {}
 
     def _path(self, table: str) -> str:
         return storage.join_path(self.root, table)
@@ -350,13 +356,28 @@ class Catalog:
         read (file-set mismatch — the read is pinned to the listed
         files, so a later-landing file is provably not in the rewrite).
         ``parent=None`` = legacy/empty layout (no committed version).
-        The fence makes both impossible wherever it is atomic."""
+        The fence makes both impossible wherever it is atomic.
+
+        Both listings run on every call; decoding does not. Data file
+        names are uuid-unique and a landed file is never rewritten, so a
+        file already decoded from this data dir has the same rows: each
+        table keeps the rows of its current dir's files, decodes only
+        files it has not seen (an append decodes one file, a new version
+        all of its files) and returns copies (end_info updates rows in
+        place). Pool threads share the cache without a lock: each stored
+        entry pairs a dir with rows of that dir's files, so a racing
+        thread's older entry costs a decode, never a wrong row."""
         path = self._path(table)
         vs = storage.committed_versions(self.spark, path)
         parent = vs[-1] if vs else None
         data = storage.version_dir(path, parent) if parent is not None else path
         files = self._data_files(data)
-        return self._read_files(table, data, files), parent, files
+        cached_dir, decoded = self._decoded.get(table, (None, {}))
+        if cached_dir != data:
+            decoded = {}
+        decoded = {n: decoded[n] if n in decoded else self._read_files(table, data, [n]) for n in files}
+        self._decoded[table] = (data, decoded)
+        return [dict(r) for n in sorted(files) for r in decoded[n]], parent, files
 
     def _read_files(self, table: str, data_dir: str, names: set[str] | list[str]) -> list[dict]:
         schema = _TABLES[table]

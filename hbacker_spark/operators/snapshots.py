@@ -21,7 +21,10 @@ Scale notes:
   (r9; previously an N-way unionByName) — a single scan node whose
   analysis cost is O(1) in chain length, with the ts cutoff and column
   pruning pushed into it.
-- empty-table probe is ``limit(1).isEmpty()`` — constant work (S6).
+- one Spark pass per exported table: the write carries an Observation
+  (row count, min/max ts), so emptiness (S6) is known from the write
+  itself; a probe such as ``limit(1).isEmpty()`` would re-run the scan
+  and the version window before the write ran them again.
 """
 
 from __future__ import annotations
@@ -29,11 +32,12 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hbacker_spark.catalog.catalog import Catalog
+from hbacker_spark.sources import storage
 
 CELLS_SCHEMA = T.StructType(
     [
@@ -128,43 +132,45 @@ class SnapshotStore:
         """Export one table's cells; returns True if data was written.
 
         Mirrors the worker path (lib/worker.rb:68-100):
-        exists?-skip (C6, idempotent resume) → emptiness probe (S6) →
-        empty ⇒ record-only (schema still captured) → else S1 scan-export
-        + catalog row (C3). TRANSIENT failures (worker.rb:28-48's
+        exists?-skip (C6, idempotent resume) → S1 scan-export → catalog
+        row (C3). The write is the only Spark pass: it observes the row
+        count, so an empty range (S6, hbase.rb:64-68) is found after the
+        write, its directory deleted and the table recorded ``empty``
+        (schema still captured). TRANSIENT failures (worker.rb:28-48's
         'release for retry') get up to ``max_retries`` in-place retries —
         partial output cleared, no catalog error row; permanent failures
-        (or retry exhaustion) are recorded (C3 error=true) and re-raised
-        ('bury', export.rb:156-163).
+        (or retry exhaustion) clear the partial output, are recorded
+        (C3 error=true) and re-raised ('bury', export.rb:156-163). Empty
+        ranges go through the same write, so they take the same retry
+        and bury paths.
         """
         if resume and self.catalog.exists(table_name, session_name, dest_root=dest_root):
             return False  # worker.rb:85-87: already recorded in this chain
         end_time = _now_ms() if end_time is None else end_time
 
         snap = scan_export(cells, start_time, end_time, versions)
-        if snap.limit(1).isEmpty():  # S6 emptiness probe (hbase.rb:64-68)
-            self.catalog.exported_table_info(
-                table_name, session_name, start_time, end_time, versions,
-                column_descriptors=column_descriptors, empty=True, dest_root=dest_root,
-            )
-            return False
         dest = snapshot_path(dest_root, session_name, table_name)
+        existed = storage.exists(self.spark, dest)  # never delete what this call did not write
         attempt = 0
         while True:
             try:
-                self._write_snapshot(snap, dest)
+                observed = self._write_snapshot(snap, dest)
                 break
             except Exception as ex:  # noqa: BLE001
                 if attempt < max_retries and is_transient_error(ex):
                     attempt += 1
-                    from hbacker_spark.sources import storage
-
                     storage.delete_path(self.spark, dest)  # clear partial output
                     self._write_log(
                         dest_root, session_name, table_name, "export_retry",
                         f"attempt={attempt} transient: {str(ex)[:200]}",
                     )
                     continue
-                # permanent (or exhausted): record then re-raise
+                # permanent (or exhausted): clear partial output, record, re-raise
+                if not existed:
+                    try:
+                        storage.delete_path(self.spark, dest)
+                    except Exception:  # noqa: BLE001 — best-effort; the error row still lands
+                        pass
                 self.catalog.exported_table_info(
                     table_name, session_name, start_time, end_time, versions,
                     column_descriptors=column_descriptors, error=True, error_info=str(ex)[:500],
@@ -172,27 +178,40 @@ class SnapshotStore:
                 )
                 self._write_log(dest_root, session_name, table_name, "export_failed", str(ex)[:500])
                 raise
+        empty = not observed["rows"]
+        if empty:
+            storage.delete_path(self.spark, dest)  # S6: an empty range keeps no directory
         self.catalog.exported_table_info(
             table_name, session_name, start_time, end_time, versions,
-            column_descriptors=column_descriptors, dest_root=dest_root,
+            column_descriptors=column_descriptors, empty=empty, dest_root=dest_root,
         )
+        if empty:
+            return False
         self._write_log(
             dest_root, session_name, table_name, "export_ok",
-            f"start={start_time} end={end_time} versions={versions}",
+            f"start={start_time} end={end_time} versions={versions} "
+            f"rows={observed['rows']} min_ts={observed['min_ts']} max_ts={observed['max_ts']}",
         )
         return True
 
-    def _write_snapshot(self, snap: DataFrame, dest: str) -> None:
+    def _write_snapshot(self, snap: DataFrame, dest: str) -> dict:
         """The one side-effecting write — isolated so tests can inject
-        transient failures and so retries re-run just this step."""
-        snap.write.mode("errorifexists").parquet(dest)
+        transient failures and so retries re-run just this step. Returns
+        the counts observed in the same pass: {rows, min_ts, max_ts}. A
+        fresh Observation per call, since one can watch only one action."""
+        obs = Observation()
+        snap.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.min("ts").alias("min_ts"),
+            F.max("ts").alias("max_ts"),
+        ).write.mode("errorifexists").parquet(dest)
+        return obs.get
 
     def _write_log(self, dest_root: str, session_name: str, table_name: str, status: str, detail: str) -> None:
         """S11 parity: job-log artifact beside the data
         (export.rb:162,168 writes <dest>/../<table>_export_log via S3);
         scheme-agnostic through the Hadoop FS layer."""
-        from hbacker_spark.sources import storage
-
         path = os.path.join(dest_root, session_name, f"{table_name}_export_log.txt")
         try:
             storage.save_info(self.spark, path, f"{status}: {detail}\n")

@@ -527,3 +527,119 @@ def test_like_helper_matches_spark_like(spark):
         want = [r["v"] for r in rows if r[f"p{i}"]]
         got = [v for v in values if _like(p)(v)]
         assert got == want, p
+
+
+def _count_decodes(monkeypatch) -> list[str]:
+    """Record every catalog data file read from storage from here on
+    (fence lockfiles are read through the same call and not counted)."""
+    from hbacker_spark.sources import storage
+
+    real = storage.read_bytes
+    reads: list[str] = []
+
+    def counting(spark, path):
+        if path.endswith(".parquet"):
+            reads.append(path)
+        return real(spark, path)
+
+    monkeypatch.setattr(storage, "read_bytes", counting)
+    return reads
+
+
+def test_unchanged_version_is_not_decoded_again(catalog, monkeypatch):
+    """A read of an unchanged catalog version lists it but reads no file;
+    after an append only the new file is read."""
+    _start(catalog)
+    catalog.exported_table_info("t1", SESSION, 0, 100, 1, dest_root=DEST)
+    catalog.next_start_times(dest_root=DEST)  # decodes sessions + tables once
+    reads = _count_decodes(monkeypatch)
+    assert catalog.next_start_times(dest_root=DEST) == [{"table_name": "t1", "next_start_time": 100}]
+    assert catalog.session_info("export").count() == 1
+    assert reads == []
+
+    catalog.exported_table_info("t2", SESSION, 0, 120, 1, dest_root=DEST)
+    wm = {r["table_name"]: r["next_start_time"] for r in catalog.next_start_times(dest_root=DEST)}
+    assert wm == {"t1": 100, "t2": 120}
+    assert len(reads) == 1
+
+
+def test_cached_reads_see_append_overwrite_and_compact(catalog, monkeypatch):
+    _start(catalog)
+    catalog.exported_table_info("t1", SESSION, 0, 100, 1, dest_root=DEST)
+    assert catalog.exists("t1", SESSION, dest_root=DEST)
+    assert catalog.session_info("export").collect()[0]["ended_at"] is None
+
+    # append
+    catalog.exported_table_info("t2", SESSION, 0, 100, 1, dest_root=DEST)
+    assert catalog.exists("t2", SESSION, dest_root=DEST)
+    # end_info: a versioned overwrite of sessions
+    catalog.end_info("export", CLUSTER, SESSION, DEST, error=True, error_info="late")
+    row = catalog.session_info("export").collect()[0]
+    assert row["ended_at"] is not None and row["error"] is True and row["error_info"] == "late"
+    # compact: a new version holding one file with the same rows
+    before = sorted(map(tuple, catalog.read("tables").collect()))
+    reads = _count_decodes(monkeypatch)
+    catalog.compact("tables", purge=True)  # the old version's files are gone
+    assert sorted(map(tuple, catalog.read("tables").collect())) == before
+    assert len(reads) == 1
+    catalog.exported_table_info("t3", SESSION, 0, 100, 1, dest_root=DEST)
+    assert {r["table_name"] for r in catalog.read("tables").collect()} == {"t1", "t2", "t3"}
+
+
+def test_second_catalog_on_same_root_sees_writes(spark, catalog):
+    other = Catalog(spark, catalog.root)
+    assert other.session_info("export").count() == 0  # warm its reads
+    _start(catalog)
+    catalog.exported_table_info("t1", SESSION, 0, 100, 1, dest_root=DEST)
+    assert other.table_info("t1", SESSION, DEST)["end_time"] == 100
+    catalog.end_info("export", CLUSTER, SESSION, DEST)
+    assert other.session_info("export").collect()[0]["ended_at"] is not None
+    other.exported_table_info("t1", SESSION, 0, 200, 1, dest_root=DEST)
+    assert catalog.next_start_times(dest_root=DEST) == [{"table_name": "t1", "next_start_time": 200}]
+
+
+def test_mutating_returned_rows_does_not_change_later_reads(catalog):
+    _start(catalog)
+    catalog.exported_table_info("t1", SESSION, 0, 100, 1, dest_root=DEST)
+    info = catalog.table_info("t1", SESSION, DEST)
+    info["end_time"] = -1
+    rows, _, _ = catalog._read_snapshot("sessions")
+    rows[0]["error"] = True
+    assert catalog.table_info("t1", SESSION, DEST)["end_time"] == 100
+    assert catalog.session_info("export").collect()[0]["error"] is False
+
+
+def test_shared_cache_under_concurrent_appends_and_compacts(catalog):
+    """Threads sharing one Catalog append, compact and read at once; every
+    writer reads its own row back and no row is lost."""
+    import sys
+    import threading
+
+    errors: list = []
+
+    def worker(i: int) -> None:
+        try:
+            for j in range(3):
+                name = f"t{i}_{j}"
+                catalog.exported_table_info(name, SESSION, 0, 100, 1)
+                if not catalog.exists(name):
+                    errors.append(name)
+                if i == 0:
+                    catalog.compact("tables")
+        except Exception as ex:  # noqa: BLE001 — reported by the assertion below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=240)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    names = sorted(r["table_name"] for r in catalog.read("tables").collect())
+    assert names == sorted(f"t{i}_{j}" for i in range(8) for j in range(3))

@@ -113,9 +113,7 @@ def _run_chain(spark, tmp, tables, n_sessions, cells, failures, pool):
                 start = watermark[t]
                 if stopped:
                     continue
-                if failures[(s, t)] == "permanent" and any(
-                    start <= c[3] < end for c in cells[t]
-                ):
+                if failures[(s, t)] == "permanent":
                     outcome[(s, t)] = ("error", start, end)
                     stopped = pool == 1
                     continue

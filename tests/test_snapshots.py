@@ -574,9 +574,12 @@ def test_full_backup_cycle_on_nonlocal_scheme(spark, tmp_path):
     # the export log artifact landed beside the data, on the viewfs scheme
     from hbacker_spark.sources import storage
 
-    assert storage.exists(
-        spark, f"{dest}/20110401_000000/vt1_export_log.txt"
-    )
+    log = storage.read_info(spark, f"{dest}/20110401_000000/vt1_export_log.txt")
+    status, _, detail = log.strip().partition(": ")
+    fields = dict(kv.split("=") for kv in detail.split())
+    assert status == "export_ok"
+    source = scan_export(cells, 0, T2).agg(F.count("*"), F.min("ts"), F.max("ts")).first()
+    assert (int(fields["rows"]), int(fields["min_ts"]), int(fields["max_ts"])) == tuple(source)
 
 
 def test_fail_fast_cancels_pending_and_attaches_resume_map(spark, store, dest, monkeypatch):
@@ -682,3 +685,101 @@ def test_import_reads_own_chain_table_row(spark, store, dest, tmp_path, monkeypa
 
     out = store.import_tables(dest, "s_same", "s_imp")
     assert sorted(map(tuple, out["t"].collect())) == sorted(map(tuple, cells.collect()))
+
+
+def _spark_jobs(spark, group, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_export_is_one_pass(spark, store, dest, tmp_path):
+    """export_table launches exactly the jobs of a bare write of its
+    scan_export plan — for a range with rows and for an empty range (no
+    separate emptiness probe re-running the scan and the window)."""
+    import os
+
+    cells = make_cells(spark)
+    for session, lo, hi in (("s_rows", 0, T3 + 1), ("s_empty", T3 + 1, T3 + 1000)):
+        bare = _spark_jobs(
+            spark, f"bare-{session}",
+            lambda: scan_export(cells, lo, hi).write.parquet(str(tmp_path / f"bare_{session}")),
+        )
+        export = _spark_jobs(
+            spark, f"export-{session}",
+            lambda: store.export_table(cells, "t", dest, session, lo, hi),
+        )
+        assert bare > 0 and export == bare, (session, export, bare)
+    rows = {r["session_name"]: r for r in store.catalog.read("tables").collect()}
+    assert rows["s_rows"]["empty"] is False and rows["s_empty"]["empty"] is True
+    assert not os.path.exists(snapshot_path(dest, "s_empty", "t"))
+
+
+def test_empty_increment_permanent_failure_is_buried(spark, store, dest, monkeypatch):
+    """The write runs for an empty range too, so a permanent failure there
+    is recorded (error=True) and the table's watermark holds."""
+    cells = make_cells(spark)
+    store.export_tables({"t": cells}, dest, "s_full", 0, T3 + 1)
+
+    def broken(self, snap, dest_path):
+        raise ValueError("permanent: empty increment write failed")
+
+    monkeypatch.setattr(SnapshotStore, "_write_snapshot", broken)
+    with pytest.raises(ValueError, match="empty increment"):
+        store.export_incremental({"t": cells}, dest, "s_incr", end_time=T3 + 1000)
+    row = store.catalog.table_info("t", "s_incr", dest)
+    assert row["error"] is True and row["empty"] is False
+    wm = {r["table_name"]: r["next_start_time"] for r in store.catalog.next_start_times(dest_root=dest)}
+    assert wm == {"t": T3 + 1}
+
+
+def test_empty_increment_transient_failure_retried(spark, store, dest, monkeypatch):
+    """A transient failure on an empty range is retried; the table is
+    recorded empty and keeps no snapshot directory."""
+    import os
+
+    cells = make_cells(spark)
+    store.export_tables({"t": cells}, dest, "s_full", 0, T3 + 1)
+    real_write = SnapshotStore._write_snapshot
+    calls = {"n": 0}
+
+    def flaky(self, snap, dest_path):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise ConnectionError("connection reset by peer (simulated)")
+        return real_write(self, snap, dest_path)
+
+    monkeypatch.setattr(SnapshotStore, "_write_snapshot", flaky)
+    store.export_incremental({"t": cells}, dest, "s_incr", end_time=T3 + 1000)
+    assert calls["n"] == 2
+    row = store.catalog.table_info("t", "s_incr", dest)
+    assert row["empty"] is True and row["error"] is False
+    assert not os.path.exists(snapshot_path(dest, "s_incr", "t"))
+    wm = {r["table_name"]: r["next_start_time"] for r in store.catalog.next_start_times(dest_root=dest)}
+    assert wm == {"t": T3 + 1000}
+
+
+def test_permanent_failure_clears_partial_output(spark, store, dest, monkeypatch):
+    """The bury path deletes what the failed write left behind, so no
+    directory survives that no clean catalog row points at."""
+    import os
+
+    cells = make_cells(spark)
+    real_write = SnapshotStore._write_snapshot
+
+    def fails_after_writing(self, snap, dest_path):
+        real_write(self, snap, dest_path)
+        raise ValueError("permanent: failed after the data landed")
+
+    monkeypatch.setattr(SnapshotStore, "_write_snapshot", fails_after_writing)
+    with pytest.raises(ValueError, match="after the data landed"):
+        store.export_table(cells, "t", dest, "s1", 0, T3 + 1)
+    assert not os.path.exists(snapshot_path(dest, "s1", "t"))
+    rows = store.catalog.read("tables").collect()
+    assert len(rows) == 1 and rows[0]["error"] is True
