@@ -15,12 +15,15 @@ time-range pruning).
 
 Scale notes:
 - the version-limit window shuffles once on the cell key (row_key, cf,
-  qualifier); Spark ≥3.5 turns rank<=k into WindowGroupLimit with
-  map-side partial top-k.
+  qualifier). Spark turns rank<=k into WindowGroupLimit (map-side
+  partial top-k) only for k <= spark.sql.optimizer.windowGroupLimitThreshold
+  (1000): restore's max_versions=1 gets it, the export's default
+  versions=100_000 does not, so an export sorts every cell in its range.
 - restore reads all N session dirs through ONE multi-path parquet scan
   (r9; previously an N-way unionByName) — a single scan node whose
-  analysis cost is O(1) in chain length, with the ts cutoff and column
-  pruning pushed into it.
+  analysis cost is O(1) in chain length, with column pruning pushed
+  into it. The ts cutoff is bound by reference (``_at_or_before``) so
+  every restore reuses one compiled class; it is not pushed down.
 - one Spark pass per exported table: the write carries an Observation
   (row count, min/max ts), so emptiness (S6) is known from the write
   itself; a probe such as ``limit(1).isEmpty()`` would re-run the scan
@@ -85,6 +88,16 @@ def _now_ms() -> int:
     return int(datetime.now(timezone.utc).timestamp() * 1000)
 
 
+def _require_versions(versions: int) -> None:
+    """A limit below one version keeps no cell: the export would record
+    the range ``empty`` and advance the watermark past cells it never
+    wrote, so the next increment would skip them for good."""
+    if versions < 1:
+        raise ValueError(
+            f"versions must be >= 1, got {versions} — an export keeping no version loses the range"
+        )
+
+
 def snapshot_path(dest_root: str, session_name: str, table_name: str) -> str:
     """dest = dest_root + session + "/" + table (export.rb:76)."""
     return os.path.join(dest_root, session_name, table_name)
@@ -97,6 +110,24 @@ def version_limited(cells: DataFrame, versions: int) -> DataFrame:
     return (
         cells.withColumn("_vr", F.row_number().over(w)).filter(F.col("_vr") <= versions).drop("_vr")
     )
+
+
+def _at_or_before(cutoff_ts: int):
+    """``ts <= cutoff_ts`` with the cutoff bound by reference.
+
+    A plain ``F.col("ts") <= cutoff_ts`` writes the LONG literal into the
+    generated Java source, so every new cutoff compiles new classes and
+    re-warms the JIT. Wrapped in a struct, the folded literal is passed
+    to the generated code as a reference object, so restores of the same
+    shape share one compiled class whatever their cutoff. The cast keeps
+    both structs ``struct<ts: bigint>`` (a cutoff below 2^31 is an INT
+    literal); struct ordering puts NULL first, hence ``IS NOT NULL``.
+    Parquet cannot push a struct comparison, so this trades away ``ts``
+    row-group pruning, which restore does not need (see
+    :meth:`SnapshotStore.restore_point_in_time`). One SQL expression is
+    one JVM call; the same tree built from Column calls took ~9 ms.
+    """
+    return F.expr(f"ts IS NOT NULL AND struct(ts) <= struct(CAST({int(cutoff_ts)} AS BIGINT))")
 
 
 def scan_export(cells: DataFrame, start_time: int, end_time: int, versions: int = DEFAULT_VERSIONS) -> DataFrame:
@@ -144,6 +175,7 @@ class SnapshotStore:
         ranges go through the same write, so they take the same retry
         and bury paths.
         """
+        _require_versions(versions)
         if resume and self.catalog.exists(table_name, session_name, dest_root=dest_root):
             return False  # worker.rb:85-87: already recorded in this chain
         end_time = _now_ms() if end_time is None else end_time
@@ -345,6 +377,7 @@ class SnapshotStore:
         workers; see :meth:`_run_table_jobs` for the concurrency and
         error contract); the default stays serial.
         """
+        _require_versions(versions)  # before the session row lands
         end_time = _now_ms() if end_time is None else end_time
         self.catalog.start_info("export", self.cluster_name, session_name, dest_root, start_time, end_time)
         try:
@@ -421,6 +454,7 @@ class SnapshotStore:
         """Next start = previous recorded end per table
         (docs/…HBASE-1684.txt:40-58); tables never exported start at 0
         (full export, mysql.rb:221-223)."""
+        _require_versions(versions)  # before the session row lands
         end_time = _now_ms() if end_time is None else end_time
         # watermarks keyed to THIS destination's chain: a new dest_root
         # starts at 0 (full export) instead of inheriting another
@@ -583,12 +617,27 @@ class SnapshotStore:
         an N-way unionByName, so the plan is a single scan node and
         analysis cost is O(1) in chain length (a 1000-increment chain
         previously paid per-session plan-analysis; measured in
-        SCALE_NOTES.md). The ts cutoff pushes into that one scan.
+        SCALE_NOTES.md).
+
+        The cutoff is bound by reference, not inlined into generated
+        code (``_at_or_before``): restores at different cutoffs share
+        one compiled class instead of compiling and JIT-warming their
+        own. The trade-off is that the cutoff no longer prunes parquet
+        row groups. That costs nothing on the catalog path: each
+        snapshot is written in cell-key order, so its row groups span
+        the session's whole ``ts`` range, and sessions starting after
+        the cutoff are already dropped. With an explicit
+        ``session_names`` list, sessions after the cutoff are now read
+        and filtered rather than skipped; the result is the same.
         """
         if cutoff_ts <= 0:
             raise ValueError(
                 f"cutoff_ts must be a positive epoch-ms timestamp, got "
                 f"{cutoff_ts} — a restore at or before 0 selects nothing"
+            )
+        if max_versions < 1:
+            raise ValueError(
+                f"max_versions must be >= 1, got {max_versions} — a restore keeping no version is empty"
             )
         if session_names is None:
             session_names = [
@@ -603,5 +652,4 @@ class SnapshotStore:
                 )
         paths = [snapshot_path(dest_root, s, table_name) for s in session_names]
         unioned = self.spark.read.schema(CELLS_SCHEMA).parquet(*paths)
-        cut = unioned.filter(F.col("ts") <= cutoff_ts)
-        return version_limited(cut, max_versions)
+        return version_limited(unioned.filter(_at_or_before(cutoff_ts)), max_versions)

@@ -398,6 +398,8 @@ def test_pitr_cutoff_required_and_positive(spark, store, dest):
         store.restore_point_in_time("t", dest, ["s_full"])  # no cutoff_ts
     with pytest.raises(ValueError, match="positive"):
         store.restore_point_in_time("t", dest, ["s_full"], cutoff_ts=0)
+    with pytest.raises(ValueError, match="max_versions must be >= 1"):
+        store.restore_point_in_time("t", dest, ["s_full"], cutoff_ts=T3, max_versions=0)
 
 
 def test_restore_chain_isolation_same_second_session_names(spark, store, dest, tmp_path):
@@ -783,3 +785,84 @@ def test_permanent_failure_clears_partial_output(spark, store, dest, monkeypatch
     assert not os.path.exists(snapshot_path(dest, "s1", "t"))
     rows = store.catalog.read("tables").collect()
     assert len(rows) == 1 and rows[0]["error"] is True
+
+
+def test_versions_below_one_rejected_before_any_row(spark, store, dest):
+    """versions=0 would write nothing, record the table ``empty`` and
+    advance the watermark past cells it never wrote. It is refused
+    before any table row lands, so the watermark stays put."""
+    cells = make_cells(spark)
+    store.export_tables({"t": cells}, dest, "s_full", 0, T2)
+
+    def watermarks():
+        return {r["table_name"]: r["next_start_time"] for r in store.catalog.next_start_times(dest_root=dest)}
+
+    before = watermarks()
+    n_rows = store.catalog.read("tables").count()
+    with pytest.raises(ValueError, match="versions must be >= 1"):
+        store.export_incremental({"t": cells}, dest, "s_inc", end_time=T3 + 1, versions=0)
+    with pytest.raises(ValueError, match="versions must be >= 1"):
+        store.export_table(cells, "t", dest, "s_direct", T2, T3 + 1, versions=0)
+    with pytest.raises(ValueError, match="versions must be >= 1"):
+        store.export_tables({"t": cells}, dest, "s_tables", T2, T3 + 1, versions=-1)
+    assert store.catalog.read("tables").count() == n_rows
+    assert watermarks() == before == {"t": T2}
+
+
+def test_restore_compiles_once_across_cutoffs(spark, store, dest):
+    """The cutoff is bound by reference, so a second restore at a NEW
+    cutoff reuses the first one's generated classes: no Janino compile."""
+    cells = make_cells(spark)
+    store.export_tables({"t": cells}, dest, "s_full", 0, T2)
+    store.export_incremental({"t": cells}, dest, "s_inc", end_time=T3 + 1)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    first = store.restore_point_in_time("t", dest, cutoff_ts=T2 + 1000).collect()
+    cutoff = T3 - 1000
+    second = store.restore_point_in_time("t", dest, cutoff_ts=cutoff)
+    before = compiles.getCount()
+    got = second.collect()
+    assert compiles.getCount() - before == 0
+    expected = version_limited(cells.filter(F.col("ts") <= cutoff), 1)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, expected.collect())) != sorted(map(tuple, first))
+
+
+def test_pitr_cutoff_below_int_range(spark, store, dest):
+    """A cutoff below 2^31 is an INT literal in PySpark; the restore
+    filter must still compare it as a LONG, on both session paths."""
+    rows = [(f"row{i % 7:03d}", "cf", "q", 1000 + i, f"v{i}") for i in range(50)]
+    cells = spark.createDataFrame(rows, CELLS_SCHEMA)
+    store.export_tables({"t": cells}, dest, "s_full", 0, 1025)
+    store.export_incremental({"t": cells}, dest, "s_inc", end_time=2000)
+    expected = version_limited(cells.filter(F.col("ts") <= 1040), 1)
+    for names in (None, ["s_full", "s_inc"]):
+        restored = store.restore_point_in_time("t", dest, names, cutoff_ts=1040)
+        assert sorted(map(tuple, restored.collect())) == sorted(map(tuple, expected.collect()))
+
+
+def test_pitr_never_restores_null_ts_cell(spark, store, dest):
+    """A hand-written, catalog-less snapshot holding a cell with a NULL
+    ``ts``: the cutoff drops it (struct ordering alone would sort NULL
+    first and keep it)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = snapshot_path(dest, "s_dump", "t")
+    os.makedirs(path)
+    table = pa.table(
+        {
+            "row_key": ["row000", "row001", "ghost"],
+            "cf": ["cf"] * 3,
+            "qualifier": ["q"] * 3,
+            "ts": pa.array([T1, T2, None], pa.int64()),
+            "value": ["a", "b", "never"],
+        }
+    )
+    pq.write_table(table, os.path.join(path, "part-0.parquet"))
+    restored = store.restore_point_in_time("t", dest, ["s_dump"], cutoff_ts=T3)
+    assert sorted(map(tuple, restored.collect())) == [
+        ("row000", "cf", "q", T1, "a"),
+        ("row001", "cf", "q", T2, "b"),
+    ]
